@@ -269,8 +269,6 @@ def _sig_with_hashset_df(docs: DataFrame) -> DataFrame:
     recomputing it 3-4x was round 1's one named scale-killer — VERDICT.md
     r1, Performance); carrying the raw shingle arrays instead (round 2's
     first attempt) made the bucket shuffle itself the bottleneck.
-    Parameterized on the input relation so the bench harness can run the
-    same pipeline against replica corpora the fixture catalog doesn't know.
 
     r15: shingle hashing rides the codegen generator path
     (th.shingle_hash_rows): duplicate gram occurrences are kept, which
@@ -386,8 +384,7 @@ def minhash_pairs_from_docs(docs: DataFrame, observation=None) -> DataFrame:
 
     The exact dedup_minhash_pairs pipeline (single-scan signatures, salted
     band-bucket pair emission, in-bucket rounded-Jaccard verify)
-    parameterized on its input, so the bench can run it against corpora the
-    fixture catalog does not know (e.g. the x16 replica corpus)."""
+    parameterized on its input relation."""
     sig = _sig_with_hashset_df(docs)
     bands = sig.select(
         F.struct("doc_id", "hs").alias("m"),

@@ -111,12 +111,7 @@ def q_graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def triangle_census(e: DataFrame) -> DataFrame:
-    """Census plan over an oriented (lo < hi) edge relation.
-
-    Shared by the registered near-dup-graph query and bench.py's
-    graph_scaling probe (which feeds synthetically replicated edges), so
-    the probe measures exactly the registered plan.
-    """
+    """Census plan over an oriented (lo < hi) edge relation."""
     # The edge relation feeds FOUR branch scans (deg + the e1/e2/e3
     # self-join); materialize it ONCE with an eager localCheckpoint and cut
     # the (expensive — LSH for the registered query) lineage, then return
@@ -284,13 +279,9 @@ def _pagerank_step(edges_w: DataFrame, ranks: DataFrame, n: int) -> DataFrame:
 
 
 def pagerank_ranks(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
-    """Power iteration over a symmetrized (src, dst) edge relation.
-
-    Shared by the registered purchase-graph query and bench.py's
-    graph_scaling probe, so the probe measures exactly the registered
-    per-iteration plan. Caller guarantees the graph is symmetric (no
-    dangling nodes); returns (v, rank) un-rounded.
-    """
+    """Power iteration over a symmetrized (src, dst) edge relation; the
+    caller guarantees symmetry (no dangling nodes). Returns (v, rank)
+    un-rounded."""
     edges = edges.persist()
     nodes = None
     try:

@@ -1019,8 +1019,8 @@ def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # persisted per-doc base, memoized per (application, fixture dir): repeated
-# invocations in one session (bench runs the pipeline several times, plan
-# tests build it again) must reuse ONE cache entry, not stack a new persist
+# invocations in one session (a benchmark runs the pipeline several times,
+# plan tests build it again) must reuse ONE cache entry, not stack a new persist
 # per call that only LRU eviction would free. The digest in the key detects
 # the driver rewriting the fixture in place (fresh entry, stale unpersisted).
 _CURATION_BASE_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}

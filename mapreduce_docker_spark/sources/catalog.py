@@ -20,6 +20,7 @@ identical values.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +62,8 @@ _RUNTIME_CONFS = {
 
 # SparkContext application ids that already had the package zip shipped.
 _SHIPPED_APPS: set[str] = set()
+# clients sharing a fresh session: one zip build, one addPyFile per app
+_SHIP_LOCK = threading.Lock()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -75,27 +78,32 @@ def _ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files`` does on a real cluster.
     """
     app_id = spark.sparkContext.applicationId
-    if app_id in _SHIPPED_APPS:
-        return
     import tempfile
     import zipfile
 
     import mapreduce_docker_spark as pkg
 
-    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    zpath = os.path.join(tempfile.gettempdir(), f"mds_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED_APPS.add(app_id)
+    with _SHIP_LOCK:
+        if app_id in _SHIPPED_APPS:
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+        zpath = os.path.join(tempfile.gettempdir(), f"mds_pkg_{os.getpid()}.zip")
+        if not os.path.exists(zpath):
+            # temp name + rename: zpath never holds a partial archive
+            tmp = f"{zpath}.tmp"
+            with zipfile.ZipFile(tmp, "w") as z:
+                for root, _dirs, files in os.walk(pkg_dir):
+                    if "__pycache__" in root:
+                        continue
+                    for fname in files:
+                        if fname.endswith(".py"):
+                            full = os.path.join(root, fname)
+                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                            z.write(full, rel)
+            os.replace(tmp, zpath)
+        spark.sparkContext.addPyFile(zpath)
+        # recorded only after addPyFile succeeded: a failed ship retries
+        _SHIPPED_APPS.add(app_id)
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
@@ -190,8 +198,6 @@ def scatter(df: DataFrame, key: str | None = None) -> DataFrame:
     (guide §2.5: never rand-derived) and ~unique per row so balance
     matches round-robin; at scale this path no-ops like the keyless one.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SCATTER"):
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()

@@ -317,3 +317,26 @@ def test_chain_dedup_invariants_on_seeded_corpus(spark, tmp_path):
                 last_kept = us_
             else:
                 assert last_kept is not None and us_ <= last_kept + delay
+
+
+def test_fingerprint_kernel_matches_jvm_twin_bit_for_bit(spark):
+    """The Arrow kernel of _dedup_unit_fingerprints equals its expression twin
+    _dedup_unit_fingerprints_jvm bit-for-bit on (vec_id, u, bits, f0..f2): the
+    fixture, plus NULL, wrong-length, zero-norm, NULL-element rows (all drop)."""
+    from mapreduce_docker_spark.sources.catalog import load_table
+
+    def rows(df):
+        return {r["vec_id"]: tuple(r)[1:] for r in df.collect()}
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    fixture = rows(dq._dedup_unit_fingerprints(spark, SF_SMOKE))
+    assert len(fixture) == 500 and fixture == rows(dq._dedup_unit_fingerprints_jvm(emb))
+    ok = [float(i % 7 - 3) for i in range(dq.DEDUP_EMB_DIM)]
+    crafted = spark.createDataFrame(
+        [(-1, None), (-2, ok[:3]), (-3, ok + [1.0]), (-4, [0.0] * len(ok)),
+         (-5, [None] + ok[1:]), (-6, ok)],
+        "vec_id long, embedding array<float>",
+    )
+    arrow = rows(crafted.mapInArrow(dq._fingerprint_batches, dq._FP_SCHEMA))
+    assert arrow == rows(dq._dedup_unit_fingerprints_jvm(crafted))
+    assert set(arrow) == {-6}

@@ -46,11 +46,10 @@ def test_triangle_stats_match_bruteforce(spark):
 
 
 def test_triangle_census_helper_crafted_graph(spark):
-    """Hand-computed census on K4 ∪ path: the shared helper bench.py's
-    graph_scaling probe feeds with replicated edges. K4 = 4 triangles,
-    12 wedges, clustering 1.0 within itself; the 5-6-7 path adds one open
-    wedge and nothing else. A disjoint replica must exactly double every
-    count and leave clustering unchanged (the probe's scaling premise)."""
+    """Hand-computed census on K4 ∪ path. K4 = 4 triangles, 12 wedges,
+    clustering 1.0 within itself; the 5-6-7 path adds one open wedge and
+    nothing else. A disjoint replica must exactly double every count and
+    leave clustering unchanged."""
     from pyspark.sql import functions as F
 
     from mapreduce_docker_spark.operators.graph_queries import triangle_census

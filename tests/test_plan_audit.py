@@ -6,7 +6,7 @@ pandas execs) exactly matches the documented-bounded allowlist in
 ``plan_audit.KNOWN`` — so a refactor that silently introduces a
 BroadcastNestedLoopJoin into a corpus-scale query, or drops a broadcast
 hint into a row-Python fallback, fails the suite instead of waiting for a
-bench regression.
+benchmark regression.
 
 Subprocess like the vanilla gate: plan building is cheap but the audit
 wants the engine's own session confs without polluting conftest's.

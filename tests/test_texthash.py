@@ -209,3 +209,26 @@ def test_symspell_blocking_is_complete_at_distance_1(spark):
     }
     assert blocked == brute
     assert brute, "fixture part vocabulary should contain distance-1 pairs"
+
+
+def test_shingle_hash_rows_matches_array_path(spark):
+    """Per-doc hash SETS of shingle_hash_rows equal explode(shingles(tokens()))
+    -> shingle_hash on the fixture plus empty, NULL and shorter-than-k texts."""
+    from mapreduce_docker_spark.sources.catalog import load_table
+    from tests.conftest import SF_SMOKE
+
+    crafted = spark.createDataFrame(
+        [(-1, ""), (-2, None), (-3, "   "), (-4, "alpha beta"), (-5, "solo")],
+        "doc_id long, text string",
+    )
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    docs = docs.unionByName(crafted)
+
+    def hash_sets(df):
+        agg = df.groupBy("doc_id").agg(F.collect_set("h"))
+        return {r[0]: set(r[1]) for r in agg.collect()}
+
+    ref = docs.select("doc_id", F.explode(th.shingles(tokens("text"))).alias("s"))
+    ref = hash_sets(ref.select("doc_id", th.shingle_hash(F.col("s")).alias("h")))
+    assert hash_sets(th.shingle_hash_rows(docs, ["doc_id"])) == ref
+    assert len(ref) == 502 and {-4, -5} <= set(ref)
